@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stark_spark.operators.text import shingles
+from stark_spark.session import local_frame
 
 
 def _sql_array_lit(values, element_type: str) -> Column:
@@ -1232,7 +1233,8 @@ def save_fp_index(fp_df: DataFrame, path: str, *, key: str = "doc_id",
     (banded.repartition("band", "bshard")
            .write.mode("overwrite").partitionBy("band", "bshard")
            .parquet(path))
-    meta = fp_df.sparkSession.createDataFrame(
+    meta = local_frame(
+        fp_df.sparkSession,
         [(int(n_bands), int(bucket_shards), key, fp_col)],
         "n_bands int, bucket_shards int, key string, fp_col string")
     meta.coalesce(1).write.mode("overwrite").parquet(path + "/_meta")

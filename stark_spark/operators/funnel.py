@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stark_spark.session import local_frame
+
 _US_PER_DAY = 86_400_000_000
 
 
@@ -92,8 +94,9 @@ def funnel(df: DataFrame, steps: list[str], *, user: str = "user_id",
                        .alias("step"))
               .groupBy("step").agg(F.count("*").alias("users")))
     spark = df.sparkSession
-    names = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(steps)], "step int, step_name string")
+    names = local_frame(
+        spark, [(i + 1, s) for i, s in enumerate(steps)],
+        "step int, step_name string")
     # scalar via agg-on-possibly-empty: when NO user reaches step 1
     # the filtered frame has zero rows, and a bare select would
     # annihilate the crossJoin (the report must still show 0s) —

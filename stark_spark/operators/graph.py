@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stark_spark.session import local_frame
+
 
 def _loop_ckpt(df: DataFrame, key: str) -> DataFrame:
     """Materialize a LOOP-INVARIANT frame hash-partitioned on the
@@ -121,7 +123,7 @@ def connected_components(edges: DataFrame, *, src: str = "a",
         schema = node_df.schema
         schema = f"node {schema['node'].dataType.simpleString()}, " \
                  f"comp {schema['node'].dataType.simpleString()}"
-        return spark.createDataFrame([(n, find(n)) for n in labs], schema)
+        return local_frame(spark, [(n, find(n)) for n in labs], schema)
 
     comp = node_df.withColumn("comp", F.col("node")).localCheckpoint()
     while True:
@@ -240,8 +242,8 @@ def _common_neighbors_local(spark, sym_rows, e_rows, k: int,
     arr = np.asarray(ids)
     rows = [(arr[va[o]].item(), arr[vw[o]].item(), int(vc[o]))
             for o in order]
-    return spark.createDataFrame(
-        rows or [], f"a {key_type}, b {key_type}, n_common long")
+    return local_frame(
+        spark, rows, f"a {key_type}, b {key_type}, n_common long")
 
 
 def common_neighbors(edges: DataFrame, *, k: int = 20,
@@ -735,8 +737,7 @@ def rich_club(edges: DataFrame, ks: list[int], *, src: str = "src",
                                  F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count("*").alias("d"))
     spark = edges.sparkSession
-    kdf = spark.createDataFrame([(int(k),) for k in sorted(set(ks))],
-                                "k long")
+    kdf = local_frame(spark, [(int(k),) for k in sorted(set(ks))], "k long")
     nk = (deg.crossJoin(F.broadcast(kdf)).where(F.col("d") > F.col("k"))
              .groupBy("k").agg(F.count("*").alias("n_nodes")))
     ek = (e.join(deg.withColumnRenamed("d", "da"), "a")

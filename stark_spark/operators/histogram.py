@@ -64,6 +64,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stark_spark.session import local_frame
+
 
 def hdr_bucket_sql(col: str, sub_bits: int = 5) -> str:
     """SQL expression for the HDR bucket id of non-negative BIGINT
@@ -276,8 +278,8 @@ def exact_quantiles(df: DataFrame, value_col: str,
                  Window.rowsBetween(Window.unboundedPreceding,
                                     Window.unboundedFollowing))))
     spark = df.sparkSession
-    pcts = spark.createDataFrame(
-        [(int(p),) for p in sorted(set(percentiles))], "pct int")
+    pcts = local_frame(
+        spark, [(int(p),) for p in sorted(set(percentiles))], "pct int")
     targets = (cdf.crossJoin(F.broadcast(pcts))
                   .withColumn("rank", F.expr("(n * pct + 99) div 100"))
                   .where((F.col("cum") >= F.col("rank"))

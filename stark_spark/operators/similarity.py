@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stark_spark.operators.dedup import _sql_array_lit
+from stark_spark.session import local_frame
 
 
 def dot_fold(a: Column, b: Column) -> Column:
@@ -198,7 +199,7 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, *,
         if Cn is None:
             # empty centroid table: the fold path's crossJoin is
             # empty -> nothing assigned; mirror that, don't crash
-            return vectors.sparkSession.createDataFrame([], out_schema)
+            return local_frame(vectors.sparkSession, [], out_schema)
 
         def assign_batches(batches):
             for pdf in batches:
@@ -332,7 +333,7 @@ def _gemm_probe_buckets(vectors: DataFrame, centroids: DataFrame,
     Cn, cids = _gemm_centroid_matrix(centroids, "c_id", "c_embedding")
     if Cn is None:
         # no centroids -> no probes (matches the fold crossJoin)
-        return vectors.sparkSession.createDataFrame([], out_schema)
+        return local_frame(vectors.sparkSession, [], out_schema)
     npv = min(n_probe, len(cids))
 
     def probe_batches(batches):
@@ -775,8 +776,8 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, *,
             rows = (vectors.orderBy(key).select(vec_col).collect())
             cb = _kmeans_local([r[0] for r in rows], n_centroids,
                                n_iter)
-            return vectors.sparkSession.createDataFrame(
-                [(i, cw) for i, cw in enumerate(cb)],
+            return local_frame(
+                vectors.sparkSession, [(i, cw) for i, cw in enumerate(cb)],
                 "c_id int, c_embedding array<double>")
 
     w = Window.orderBy(key)
@@ -1125,8 +1126,7 @@ def _pq_cb_frame(spark, codebook):
     rows = [(s, c, [float(x) for x in cw])
             for s, sub in enumerate(codebook)
             for c, cw in enumerate(sub)]
-    return spark.createDataFrame(
-        rows, "sub_id int, code int, cw array<double>")
+    return local_frame(spark, rows, "sub_id int, code int, cw array<double>")
 
 
 def _pq_subvectors(vectors: DataFrame, *, key: str, vec_col: str,

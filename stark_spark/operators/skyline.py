@@ -23,6 +23,7 @@ same algorithm with the stage-1 grouping key = angular bucket
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,21 +31,24 @@ from pyspark.sql import functions as F
 
 def _local_skyline(pdf: pd.DataFrame, x: str, y: str) -> pd.DataFrame:
     """Vectorized 2-D min-min skyline: sort by (x, y), keep rows whose y
-    is a strict running minimum; equal points all survive (ties kept,
-    matching 'not dominated' semantics)."""
+    is below the minimum y of every earlier row; exact duplicates of a
+    kept point all survive (ties kept, matching 'not dominated'
+    semantics). A null (NaN) y is never kept and never lowers the
+    running minimum."""
     if len(pdf) == 0:
         return pdf
-    s = pdf.sort_values([x, y], kind="mergesort").reset_index(drop=True)
-    keep = []
-    best_y = None
-    best_x = None
-    for i in range(len(s)):
-        xi, yi = s[x].iat[i], s[y].iat[i]
-        if best_y is None or yi < best_y or (yi == best_y and xi == best_x):
-            keep.append(i)
-            best_y = yi if best_y is None else min(best_y, yi)
-            best_x = xi
-    return s.iloc[keep]
+    order = np.lexsort((pdf[y].to_numpy(), pdf[x].to_numpy()))
+    s = pdf.iloc[order].reset_index(drop=True)
+    xs, ys = s[x].to_numpy(), s[y].to_numpy()
+    known = ~pd.isna(ys)
+    run_min = np.minimum.accumulate(np.where(known, ys, np.inf))
+    new = known.copy()
+    new[1:] &= ys[1:] < run_min[:-1]
+    # a run of equal (x, y) rows shares the verdict of its first row
+    start = np.ones(len(s), dtype=bool)
+    start[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
+    keep = new[start][np.cumsum(start) - 1]
+    return s[keep]
 
 
 #: stage-1 survivor count above which the global merge switches from

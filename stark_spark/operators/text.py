@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stark_spark.session import local_frame
+
 # tiny deterministic english-ish stopword set (shared with oracle SQL)
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -535,7 +537,7 @@ def bm25_multi_topk(df: DataFrame, key: str, queries: DataFrame, k: int,
     # naturally (it is in neither the idf nor the qterms frame).
     SENT = "\x00 stats"
     vocab_plus = vocab.unionByName(
-        spark.createDataFrame([(SENT,)], "_term string"))
+        local_frame(spark, [(SENT,)], "_term string"))
 
     # inverted-index hits: explode -> broadcast vocab prune -> one
     # corpus-keyed shuffle; _dl rides along (constant per key)
@@ -565,7 +567,8 @@ def bm25_multi_topk(df: DataFrame, key: str, queries: DataFrame, k: int,
                   .withColumn("n_tokens", F.lit(0).cast("long"))
                   .withColumn("score_q", F.lit(0).cast("long")))
     n_docs, avgdl = sent.nd, float(sent.sdl) / float(sent.nd)
-    idf = spark.createDataFrame(
+    idf = local_frame(
+        spark,
         [(t, math.floor(math.log(
             (n_docs - c + 0.5) / (c + 0.5) + 1.0) * 1e6))
          for t, c in nd.items()],
@@ -811,9 +814,9 @@ def bpe_train(df: DataFrame, n_merges: int, *,
             F.expr(_bpe_apply_merge("syms", a, b)).alias("syms"), "c")
             .localCheckpoint())
     spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "rank long, left string, right string, "
-                "merged string, cnt long")
+    return local_frame(
+        spark, merges, "rank long, left string, right string, "
+                       "merged string, cnt long")
 
 
 def pmi_collocations(df: DataFrame, k: int = 50, *,

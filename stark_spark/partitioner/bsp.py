@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stark_spark.partitioner.grid import GridSpec, with_cell
+from stark_spark.session import local_frame
 
 
 @dataclass
@@ -110,5 +111,6 @@ def assign_bsp_cells(df: DataFrame, grid: GridSpec,
         for cy in range(leaf.cy0, leaf.cy1):
             for cx in range(leaf.cx0, leaf.cx1):
                 mapping.append((cy * grid.nx + cx, pid))
-    mdf = df.sparkSession.createDataFrame(mapping, "_bsp_cell int, {} int".format(part_col))
+    mdf = local_frame(df.sparkSession, mapping,
+                      "_bsp_cell int, {} int".format(part_col))
     return cdf.join(F.broadcast(mdf), "_bsp_cell").drop("_bsp_cell"), leaves

@@ -7,11 +7,15 @@ predicate, result clipped to matching pixels via `RasterUtils.
 getPixels` `RasterUtils.scala:128-216`), `raster/RasterJoinRDD.scala:
 10-66` (per overlapping tile pair: intersection MBR, pixel combine).
 
-Physical shape = the engine's standard join recipe: tiles get bbox
-columns (`tile_bbox_cols`) → grid cell equi-join → native bbox
-prefilter → Arrow-vectorized clip/combine over the pixel arrays. The
-pixel work is numpy over Arrow batches — per-tile vectorized, never
-per-pixel Python.
+Physical shape: tiles get bbox columns (`tile_bbox_cols`) → native
+rect × rect candidate join (grid cell equi-join or broadcast, closed
+bbox overlap) → ONE Python pass that does everything Python has to
+do: the exact tile-vs-geometry refine and the pixel clip/combine in
+one `mapInPandas`, or, unclipped, the refine alone as a pandas UDF
+that sees only the bbox and geometry columns. A tile IS its envelope,
+so no tile geometry column is ever built and each task holds one
+Python worker. The pixel work is numpy over Arrow batches — per-tile
+vectorized, never per-pixel Python.
 """
 
 from __future__ import annotations
@@ -19,21 +23,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
-                               StructField, StructType)
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
+                               IntegerType, LongType, StructField, StructType)
 
 from stark_spark.core import geometry as G
-from stark_spark.functions.constructors import st_box
+from stark_spark.functions.constructors import BBOX_COLS
 from stark_spark.functions.predicates import _as_geom, bbox_intersects
 from stark_spark.partitioner.grid import GridSpec
 from stark_spark.raster.tiles import tile_bbox_cols
-
-
-def _with_tile_geom(t: DataFrame) -> DataFrame:
-    """Tile bbox → rectangle WKB geom (the refine side of the joins)."""
-    return t.withColumn("geom", st_box(F.col("xmin"), F.col("ymin"),
-                                       F.col("xmax"), F.col("ymax")))
 
 _TILE_OUT = StructType([
     StructField("ulx", DoubleType()), StructField("uly", DoubleType()),
@@ -41,6 +39,15 @@ _TILE_OUT = StructType([
     StructField("pixel_width", DoubleType()),
     StructField("data", ArrayType(LongType())),
 ])
+
+
+@pandas_udf(BooleanType())
+def _tile_hits(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
+               ymax: pd.Series, geom: pd.Series) -> pd.Series:
+    """Exact refine of a tile (its bbox IS its geometry) against a WKB
+    geometry — the one Python pass of an unclipped join."""
+    return pd.Series([G.intersects(G.box(*b), G.from_wkb(bytes(g)))
+                      for *b, g in zip(xmin, ymin, xmax, ymax, geom)])
 
 
 def _pixel_centers(ulx, uly, w, h, pw):
@@ -104,56 +111,61 @@ def raster_join_vector(tiles: DataFrame, vec: DataFrame, *,
                        clip: bool = True, suffix: str = "_r",
                        vec_rect: bool = False,
                        broadcast: bool = False) -> DataFrame:
-    """Tiles ⋈ geometries (intersects): grid cell equi-join + bbox
-    prefilter; each matched pair yields the tile clipped to the
-    geometry (`RasterJoinVectorRDD`). Output: vec payload + clipped
-    tile columns.
+    """Tiles ⋈ geometries (intersects); each matched pair yields the
+    tile clipped to the geometry (`RasterJoinVectorRDD`). Output: vec
+    payload + clipped tile columns (``clip=False``: the unclipped tile
+    and every vec column, ``geom`` + suffix included).
 
-    Tiles ARE their envelopes; with ``vec_rect=True`` (axis-aligned
-    vector side) the join is declared rect × rect and the whole plan is
-    native — no refine UDF and no tile geometry column at all. With
-    arbitrary vector geometries the tile side carries a box WKB for
-    the pair refine.
+    Candidates come from a native rect × rect join of the tile bboxes
+    with the vector bboxes (grid cell equi-join, or ``broadcast``).
+    Tiles ARE their envelopes, so for an axis-aligned vector side
+    (``vec_rect=True``) the bbox overlap is the exact predicate and
+    ``clip=False`` plans no Python at all. Otherwise the exact refine
+    ``intersects(box(tile), geom)`` runs inside the single Arrow pass
+    that also clips; unclipped, it is a pandas UDF fed only the tile
+    bbox and ``geom`` + suffix, so tile pixels and vec payload never
+    leave the JVM. Either way: one Python worker per task.
 
     ``broadcast=True``: dim-sized vector side (boundary tables are
     typically O(10²) rows) → BNLJ, skipping the cell explode AND both
     shuffles — the right default whenever vec fits a broadcast."""
     from stark_spark.operators.join import st_join
 
-    t = tile_bbox_cols(tiles)
-    if not vec_rect:
-        t = _with_tile_geom(t)
-    joined = st_join(t, vec, "intersects", grid=grid, suffix=suffix,
-                     left_rect=vec_rect, right_rect=vec_rect,
+    joined = st_join(tile_bbox_cols(tiles), vec, "intersects", grid=grid,
+                     suffix=suffix, left_rect=True, right_rect=True,
                      broadcast=broadcast)
-    if not vec_rect:
-        joined = joined.drop("geom")
-
-    keep = [c for c in joined.columns
-            if c not in ("xmin", "ymin", "xmax", "ymax")]
-    joined = joined.select(*keep)
+    keep = [c for c in joined.columns if c not in BBOX_COLS]
+    gcol = "geom" + suffix
+    rbox = tuple(c + suffix for c in BBOX_COLS)
+    refine = gcol in joined.columns and not vec_rect
     if not clip:
-        return joined
+        if refine:      # narrow UDF input: the payload stays in the JVM
+            joined = joined.where(_tile_hits(*BBOX_COLS, gcol))
+        return joined.select(*keep)
 
-    rbox = tuple(c + suffix for c in ("xmin", "ymin", "xmax", "ymax"))
-    has_geom = ("geom" + suffix) in joined.columns
-    pay_fields = [joined.schema[c] for c in joined.columns
+    pos = {c: i for i, c in enumerate(joined.columns)}
+    pay_fields = [joined.schema[c] for c in keep
                   if c not in ("ulx", "uly", "width", "height", "pixel_width",
-                               "data", "geom" + suffix) + rbox]
+                               "data", gcol) + rbox]
     out_schema = StructType(list(_TILE_OUT.fields) + pay_fields)
-    pay_cols = [f.name for f in pay_fields]
+    tbox_at = [pos[c] for c in BBOX_COLS]
+    rbox_at = [pos[c] for c in rbox]
+    pay_at = [pos[f.name] for f in pay_fields]
 
     def run(batches):
         for pdf in batches:
             rows = []
-            for row in pdf.itertuples():
-                if has_geom:
-                    g = G.from_wkb(bytes(getattr(row, "geom" + suffix)))
+            for row in pdf.itertuples(index=False):
+                if gcol in pos:
+                    g = G.from_wkb(bytes(row[pos[gcol]]))
                 else:       # rect vector side: its bbox IS the geometry
-                    g = G.box(*(float(getattr(row, c)) for c in rbox))
+                    g = G.box(*(float(row[i]) for i in rbox_at))
+                if refine and not G.intersects(
+                        G.box(*(row[i] for i in tbox_at)), g):
+                    continue
                 r = _clip_tile(row, g)
                 if r is not None:
-                    rows.append(r + tuple(getattr(row, c) for c in pay_cols))
+                    rows.append(r + tuple(row[i] for i in pay_at))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in out_schema.fields])
 

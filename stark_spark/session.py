@@ -6,14 +6,16 @@ inject a join strategy and register ``st_*`` functions. Our engine
 needs neither a custom Strategy (joins are explicit plan rewrites) nor
 a UDT — this module just centralizes the confs that matter at scale:
 AQE (runtime re-plan, skew-join splitting, broadcast switch), Arrow
-for every pandas UDF boundary, and shuffle-partition sizing.
+for every pandas UDF boundary, and shuffle-partition sizing — plus
+`local_frame`, the one way the package turns driver-side rows into a
+frame (through Arrow, without a Python worker).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Confs applied to every session we build. At 100 TB / 1000 executors the
 # absolute numbers (shuffle partitions, maxPartitionBytes) come from the
@@ -40,6 +42,39 @@ _SCALE_CONFS = {
     # read as long nanos — `datasets.load` converts to TimestampType.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built frame (``rows``: tuples in ``schema`` field order;
+    ``schema``: DDL string or StructType) as an Arrow-backed
+    ``LocalRelation``.
+
+    ``createDataFrame(<python list>)`` parallelizes the list and
+    re-pickles it through a ``PythonRDD`` — its first action starts a
+    Python daemon and workers just to hand back rows the driver already
+    holds. The Arrow-table form ships one Arrow stream to the JVM and
+    plans a ``LocalTableScan``: no Python worker, exact size statistics
+    for the broadcast decision. There is no fallback — a value that does
+    not fit its field's type raises here, where the list form's schema
+    check would have raised too.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values "
+                         f"({schema.simpleString()})")
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def configure(builder: SparkSession.Builder, *, shuffle_partitions: int | None = None):

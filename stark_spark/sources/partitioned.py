@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from stark_spark.core import geometry as G
 from stark_spark.functions.predicates import _as_geom, st_predicate
 from stark_spark.partitioner.grid import GridSpec
+from stark_spark.session import local_frame
 
 MANIFEST = "_stark_manifest"
 
@@ -100,7 +101,8 @@ def save_partitioned(df: DataFrame, path: str, grid: GridSpec, *,
                   F.min("t_start").alias("t_min"), F.max("t_end").alias("t_max"),
                   F.count("*").alias("n_rows")))
     spark = df.sparkSession
-    gb = spark.createDataFrame(
+    gb = local_frame(
+        spark,
         [(c,) + grid.cell_bounds(c) for c in range(grid.nx * grid.ny)],
         "cell int, rng_xmin double, rng_ymin double, rng_xmax double, rng_ymax double")
     (mf.join(gb, "cell")

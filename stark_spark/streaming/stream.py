@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stark_spark.partitioner.grid import GridSpec
+from stark_spark.session import local_frame
 
 
 def read_event_stream(spark: SparkSession, path: str, schema,
@@ -410,8 +411,8 @@ def stream_contamination(stream: DataFrame, eval_df: DataFrame, *,
         words, m, k = bloom_build(hashes, fpp)
         flagged = hashed.where(bloom_might_contain(
             "content_hash", words, m, k))
-        truth = stream.sparkSession.createDataFrame(
-            [(h,) for h in hashes], "content_hash string")
+        truth = local_frame(stream.sparkSession,
+                            [(h,) for h in hashes], "content_hash string")
     elif impl == "jvm":
         ev_hashes = (eval_df.select(ev_hash.alias("h")).distinct()
                      .localCheckpoint(eager=True))

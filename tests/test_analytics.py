@@ -17,7 +17,7 @@ from stark_spark.operators.dedup import (exact_dups, lsh_candidate_pairs,
                                          ngram_jaccard_pairs, simhash64,
                                          simhash_near_pairs)
 from stark_spark.operators.similarity import brute_force_topk, cosine, ivf_topk
-from stark_spark.operators.skyline import skyline
+from stark_spark.operators.skyline import _local_skyline, skyline
 from stark_spark.operators.text import text_profile
 from stark_spark.partitioner.grid import GridSpec
 
@@ -35,6 +35,25 @@ def _pandas_skyline(pdf, x="x", y="y"):
     return pdf.iloc[keep]
 
 
+def _tie_corpora():
+    """Tie-heavy inputs for the sort-and-running-min sweep: exact
+    duplicates (of skyline and of dominated points), equal y with
+    different x, one point repeated, and null y (one of them at the
+    smallest x, so it sorts first)."""
+    rng = np.random.RandomState(3)
+    dups = [(i, float(rng.randint(0, 6)), float(rng.randint(0, 6)))
+            for i in range(300)]
+    equal_y = [(i, float(i % 17), float(5 + (i % 3 == 0))) for i in range(200)]
+    equal_y += [(1000 + i, 20.0 + i, 4.0) for i in range(5)]
+    all_equal = [(i, 2.5, -1.0) for i in range(64)]
+    nulls = [(i, float(rng.randint(0, 20)),
+              None if i % 7 == 3 else float(rng.randint(0, 20)))
+             for i in range(200)]
+    nulls += [(500, -1.0, None), (501, 4.0, None), (502, 4.0, None)]
+    return {"dups": dups, "equal_y": equal_y, "all_equal": all_equal,
+            "nulls": nulls}
+
+
 def test_skyline_matches_bruteforce(spark, sf_dir):
     ev = D.st_events(spark, sf_dir, keep_geom=False)
     got = skyline(ev, "x", "y").select("event_id").toPandas()
@@ -42,15 +61,22 @@ def test_skyline_matches_bruteforce(spark, sf_dir):
     want = _pandas_skyline(pdf)
     assert set(got.event_id) == set(want.event_id)
     assert len(got) == len(want)
+    for name, rows in _tie_corpora().items():
+        pdf = pd.DataFrame(rows, columns=["id", "x", "y"])
+        got = _local_skyline(pdf.sample(frac=1.0, random_state=1), "x", "y")
+        want = _pandas_skyline(pdf[pdf.y.notna()])   # null y: never kept
+        assert sorted(got.id) == sorted(want.id), name
 
 
 def test_skyline_many_plans(spark):
     rows = [(i, float((i * 37) % 101), float((i * 61) % 97)) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, x double, y double")
-    want = set(_pandas_skyline(df.toPandas()).id)
-    assert set(skyline(df).select("id").toPandas().id) == want
-    rep = df.repartition(13)
-    assert set(skyline(rep).select("id").toPandas().id) == want
+    for name, corpus in [("mod", rows), *_tie_corpora().items()]:
+        df = spark.createDataFrame(corpus, "id long, x double, y double")
+        pdf = df.toPandas()
+        want = set(_pandas_skyline(pdf[pdf.y.notna()]).id)
+        assert set(skyline(df).select("id").toPandas().id) == want, name
+        rep = df.repartition(13)
+        assert set(skyline(rep).select("id").toPandas().id) == want, name
 
 
 def test_skyline_distributed_merge_anticorrelated(spark, monkeypatch):

@@ -175,3 +175,149 @@ def test_csv_tiles_without_sma(tiles, spark, tmp_path):
     back = tiles_from_csv(spark, d, dtype="bigint")
     assert back.where(back.sma_min.isNotNull()).count() == 0
     assert back.count() == tiles.count()
+
+
+# ------------------------------------------- fused refine + clip (one pass)
+
+# tiles 10×10 over [0, 40]²; vector shapes chosen so the bbox prefilter
+# alone is wrong: an L whose bbox covers tiles its area misses, a star,
+# a diagonal line, points (one on a tile corner) and boxes that only
+# touch a tile edge or corner
+_REFINE_VEC = [
+    (1, "POLYGON ((0 0, 30 0, 30 2, 2 2, 2 30, 0 30, 0 0))"),
+    (2, "POLYGON ((20 12, 23 18, 30 19, 24 23, 26 30, 20 26, "
+        "14 30, 16 23, 10 19, 17 18, 20 12))"),
+    (3, "LINESTRING (1 39, 39 1)"),
+    (4, "POINT (15 15)"),
+    (5, "POINT (10 10)"),
+    (6, "POLYGON ((40 0, 50 0, 50 10, 40 10, 40 0))"),
+    (7, "POLYGON ((-5 -5, 0 -5, 0 0, -5 0, -5 -5))"),
+    (8, "MULTIPOINT ((35 5), (5 35))"),
+]
+
+
+@pytest.fixture(scope="module")
+def refine_inputs(spark):
+    """UDF-free inputs: tile rows and vec WKB/bbox built on the driver."""
+    from stark_spark.core import geometry as G
+    from stark_spark.session import local_frame
+    tile_rows = [(tx * 10.0, (ty + 1) * 10.0, TILE_PX, TILE_PX, PW,
+                  [100 * (tx * 4 + ty) + k for k in range(TILE_PX * TILE_PX)])
+                 for tx in range(4) for ty in range(4)]
+    tiles = local_frame(
+        spark, tile_rows, "ulx double, uly double, width int, height int, "
+                          "pixel_width double, data array<bigint>")
+    vec_rows = []
+    for vid, wkt in _REFINE_VEC:
+        g = G.from_wkt(wkt)
+        vec_rows.append((vid, G.to_wkb(g)) + tuple(g.bbox))
+    vec = local_frame(spark, vec_rows, "vid int, geom binary, xmin double, "
+                                       "ymin double, xmax double, ymax double")
+    return tiles, vec, tile_rows
+
+
+def _expected_join(tile_rows, clip):
+    """Per candidate (closed bbox overlap): exact G.intersects refine,
+    then `_clip_tile` — computed tile by tile on the driver. Also
+    returns the candidate count, so a test can see the refine bite."""
+    from collections import namedtuple
+
+    from stark_spark.core import geometry as G
+    from stark_spark.raster.join import _clip_tile
+    T = namedtuple("T", "ulx uly width height pixel_width data")
+    out, n_cand = [], 0
+    for t in tile_rows:
+        row = T(*t)
+        tbox = G.box(row.ulx, row.uly - row.height * row.pixel_width,
+                     row.ulx + row.width * row.pixel_width, row.uly)
+        for vid, wkt in _REFINE_VEC:
+            g = G.from_wkt(wkt)
+            ax0, ay0, ax1, ay1 = tbox.bbox
+            bx0, by0, bx1, by1 = g.bbox
+            if ax0 > bx1 or bx0 > ax1 or ay0 > by1 or by0 > ay1:
+                continue
+            n_cand += 1
+            if not G.intersects(tbox, g):
+                continue
+            if not clip:
+                out.append((vid, row.ulx, row.uly, row.width, tuple(row.data)))
+                continue
+            r = _clip_tile(row, g)
+            if r is not None:
+                out.append((vid, r[0], r[1], r[2], r[3], tuple(r[5])))
+    return sorted(out, key=repr), n_cand
+
+
+@pytest.mark.parametrize("clip", [True, False])
+@pytest.mark.parametrize("broadcast", [False, True])
+def test_join_vector_fused_refine_matches_reference(refine_inputs, clip,
+                                                    broadcast):
+    tiles, vec, tile_rows = refine_inputs
+    grid = GridSpec(0, 0, 40.0001, 40.0001, 4, 4)
+    fields = ("ulx", "uly", "width") + (("height",) if clip else ())
+
+    def got(out, head):
+        return sorted((head(r) + tuple(r[f] for f in fields)
+                       + (tuple(r.data),) for r in out.collect()), key=repr)
+
+    out = raster_join_vector(tiles, vec, grid=grid, clip=clip,
+                             broadcast=broadcast)
+    if clip:
+        assert "geom_r" not in out.columns
+    else:
+        assert {"geom_r", "xmin_r"} <= set(out.columns)
+    want, n_cand = _expected_join(tile_rows, clip)
+    # the refine matters on these inputs: bbox candidates it must drop
+    assert len(want) < n_cand - 10
+    assert got(out, lambda r: (r.vid,)) == want
+    # a vector side of geom + bbox only: no payload column to carry
+    bare = raster_join_vector(tiles, vec.drop("vid"), grid=grid, clip=clip,
+                              broadcast=broadcast)
+    assert got(bare, lambda r: ()) == sorted((w[1:] for w in want), key=repr)
+
+
+def test_join_vector_unclipped_payload_stays_exact(refine_inputs):
+    """Unclipped, the vec payload never round-trips through pandas: a
+    nullable long above 2**53 comes back bit-exact."""
+    tiles, vec, _ = refine_inputs
+    big = 2 ** 60 + 1
+    vec = vec.withColumn("big", F.when(F.col("vid") % 2 == 0,
+                                       F.lit(big) + F.col("vid")))
+    out = raster_join_vector(tiles, vec, grid=GridSpec(
+        0, 0, 40.0001, 40.0001, 4, 4), clip=False)
+    rows = out.select("vid", "big").collect()
+    assert rows and any(r.big is None for r in rows)
+    assert all(r.big == (big + r.vid if r.vid % 2 == 0 else None)
+               for r in rows)
+
+
+def _python_nodes(plan) -> list[str]:
+    """Python-evaluating physical nodes of an executed plan, walking
+    AQE stages but not into cached (InMemoryRelation) subplans."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _python_nodes(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _python_nodes(plan.plan())
+    own = [name] if ("Python" in name or "Pandas" in name) else []
+    kids = plan.children()
+    return own + [n for i in range(kids.size())
+                  for n in _python_nodes(kids.apply(i))]
+
+
+@pytest.mark.parametrize("clip", [True, False])
+def test_join_vector_single_python_pass(refine_inputs, clip):
+    tiles, vec, _ = refine_inputs
+    grid = GridSpec(0, 0, 40.0001, 40.0001, 4, 4)
+    out = raster_join_vector(tiles.cache(), vec, grid=grid, clip=clip)
+    out.collect()
+    nodes = _python_nodes(out._jdf.queryExecution().executedPlan())
+    # clipped: refine + clip in one mapInPandas; unclipped: the refine
+    # alone as one pandas UDF over the bbox and geometry columns
+    assert nodes == ["MapInPandasExec" if clip else "ArrowEvalPythonExec"], \
+        nodes
+    # an axis-aligned vector side without clip stays fully native
+    rect = raster_join_vector(tiles, vec, grid=grid, clip=False,
+                              vec_rect=True)
+    rect.collect()
+    assert _python_nodes(rect._jdf.queryExecution().executedPlan()) == []
